@@ -44,8 +44,8 @@ validity labels.  The JSON carries every sample with its probe ratios plus
 a "validity" block naming rejected samples, so the recorded number is
 auditable, not just asserted.
 
-A "skew" section times fused vs two_phase vs size_bucketed (and two-phase
-rebalance widths) on the north_rule's skew shapes — one doc with 10^3
+A "skew" section times fused vs two_phase (and two-phase rebalance
+widths) on the north_rule's skew shapes — one doc with 10^3
 media spans plus multi-MB single-span payloads — where the two-phase
 composition fan-out is the designed win (SURVEY.md §4.3.1).
 
@@ -485,10 +485,6 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
     skew_thunks: list[tuple[str, object]] = [
         ("skew_fused", lambda: _noop(extract(skew_docs, mode="fused"))),
         ("skew_two_phase", lambda: _noop(extract(skew_docs, mode="two_phase"))),
-        (
-            "skew_size_bucketed",
-            lambda: _noop(extract(skew_docs, mode="size_bucketed")),
-        ),
         (
             "skew_two_phase_w1x",
             lambda: _noop(

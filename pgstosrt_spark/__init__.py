@@ -14,10 +14,11 @@ Architecture (Spark-first):
                      state machine, RLE decode, palette LUT, duplicate merge,
                      deterministic glyph OCR).  No Spark imports; unit-tested
                      against the reference semantics cited per function.
-  * ``kernels.py`` — Arrow-vectorized ``mapInPandas`` kernels wrapping the
-                     core (never per-row Python UDFs).
-  * ``pipeline.py``— the DataFrame plan: explode -> filter -> kernel ->
-                     re-merge, one shuffle on doc_id.
+  * ``kernels.py`` — Arrow-vectorized ``mapInArrow``/``mapInPandas`` kernels
+                     wrapping the core (never per-row Python UDFs).
+  * ``pipeline.py``— the DataFrame plans: by default one scan -> per-document
+                     kernel, no shuffle; ``two_phase`` explodes payloads and
+                     rebalances compositions for skew, then re-merges.
   * ``functions/`` — training-data ops (dedup, language-ID, quality, tokens,
                      fingerprints, ANN similarity) as built-in ``F.*``
                      expressions wherever possible.

@@ -30,7 +30,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .pipeline import extract_cue_rows, split_side_channel
+from .pipeline import assemble_spans, extract_cue_rows, extract_with_side, split_side_channel
 
 __all__ = [
     "committed_batches",
@@ -44,20 +44,25 @@ def partition_lineage(side: DataFrame) -> DataFrame:
     """Aggregate the kernels' ``_metric`` side-channel into per-physical-
     partition lineage rows (north_rule: per-partition lineage + metrics):
 
-        part, n_payloads, n_cues, n_bytes, wall_ms, n_errors
+        part, n_payloads, n_comps, n_cues, n_dropped, n_bytes, wall_ms, n_errors
+
+``n_cues + n_dropped == n_comps``: a composition whose rasterize/OCR
+fails is counted, never silently lost.
 
     One narrow JSON projection + one tiny groupBy — the metric rows are a
     few hundred bytes each regardless of payload size, so this aggregates
     cheaply even when the extraction itself processed terabytes.
     """
-    metric_schema = "bytes long, cues long, part int, wall_ms double"
+    metric_schema = "bytes long, comps long, cues long, dropped long, part int, wall_ms double"
     parsed = side.select(
         "kind", F.from_json("text", metric_schema).alias("m")
     )
     metrics = parsed.filter(F.col("kind") == "_metric").select(
         F.col("m.part").alias("part"),
         F.col("m.bytes").alias("bytes"),
+        F.col("m.comps").alias("comps"),
         F.col("m.cues").alias("cues"),
+        F.col("m.dropped").alias("dropped"),
         F.col("m.wall_ms").alias("wall_ms"),
     )
     errors = (
@@ -67,7 +72,9 @@ def partition_lineage(side: DataFrame) -> DataFrame:
     )
     agg = metrics.groupBy("part").agg(
         F.count("*").alias("n_payloads"),
+        F.sum("comps").alias("n_comps"),
         F.sum("cues").alias("n_cues"),
+        F.sum("dropped").alias("n_dropped"),
         F.sum("bytes").alias("n_bytes"),
         F.round(F.sum("wall_ms"), 3).alias("wall_ms"),
     )
@@ -145,6 +152,21 @@ def _commit(spark: SparkSession, out_dir: str, batch_id: int, payload: dict) -> 
         raise IOError(f"manifest rename failed: {tmp} -> {final}")
 
 
+def _batch_outputs(
+    batch_docs: DataFrame, mode: str, **extract_kw
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """-> (cached kernel output, extracted documents, side-channel rows),
+    the last two read from the first: the kernel runs once per batch."""
+    if mode == "fused":
+        out = extract_with_side(batch_docs, **extract_kw).cache()
+        side = out.select("doc_id", F.explode("side").alias("s")).select(
+            "doc_id", "s.offset", "s.seq", "s.kind", "s.text", "s.media_ref"
+        )
+        return out, out.drop("side"), side
+    flat = extract_cue_rows(batch_docs, mode=mode, **extract_kw).cache()
+    return flat, assemble_spans(batch_docs, flat), split_side_channel(flat)[1]
+
+
 def run_with_checkpoints(
     spark: SparkSession,
     documents: DataFrame,
@@ -157,10 +179,11 @@ def run_with_checkpoints(
     """Extract with per-batch snapshot commits; idempotent on re-run.
 
     ``max_batches`` limits work this invocation (used by tests to simulate
-    a mid-run kill).  Returns the batch ids committed by THIS run.
+    a mid-run kill).  Returns the batch ids committed by THIS run.  In the
+    default mode each batch reads ``documents`` once: the one-scan plan's
+    output is cached and both ``data/`` and ``metrics/`` (CUE_SCHEMA rows,
+    one ``_metric``/``_error`` row per media payload) are written from it.
     """
-    from .pipeline import assemble_spans
-
     done_before = set(committed_batches(out_dir, spark))
     df = _with_batch(documents, n_batches)
     committed_now: list[int] = []
@@ -171,23 +194,19 @@ def run_with_checkpoints(
             break
         batch_docs = df.filter(F.col("_batch") == batch_id).drop("_batch")
         t0 = time.perf_counter()
-        # kernel runs once: the flat rows are cached and feed both the
-        # extracted table and the metrics side-channel
-        flat = extract_cue_rows(batch_docs, mode=mode, **extract_kw).cache()
+        cached, extracted, side = _batch_outputs(batch_docs, mode, **extract_kw)
         try:
-            _cues, side = split_side_channel(flat)
-            extracted = assemble_spans(batch_docs, flat)
             data_path = os.path.join(out_dir, "data", f"batch={batch_id}")
             metrics_path = os.path.join(out_dir, "metrics", f"batch={batch_id}")
             extracted.write.mode("overwrite").parquet(data_path)
             side.write.mode("overwrite").parquet(metrics_path)
-            # manifest counts from the CACHED flat rows — re-reading the
+            # manifest counts from the CACHED kernel output — re-reading the
             # parquet just written costs a full extra read per batch at
             # scale; the cache guarantees the kernel doesn't re-run either
             n_docs = extracted.count()
             n_side = side.count()
         finally:
-            flat.unpersist()
+            cached.unpersist()
         _commit(
             spark,
             out_dir,

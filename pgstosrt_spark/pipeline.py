@@ -1,27 +1,48 @@
-"""The extraction DataFrame plan (SURVEY.md §3.4 lifecycle).
+"""The extraction DataFrame plans (SURVEY.md §3.4 lifecycle).
+
+Default (``mode='fused'``) — one scan, no exchange:
+
+    documents(doc_id, spans)                        one FileScan
+       │ transform(spans, s -> s + payload)          narrow projection:
+       │   payload = try_to_binary(text, 'base64')   JVM-side base64 decode,
+       │   on media spans, text dropped there        NULL if not base64
+       ▼
+    mapInArrow per-document kernel (kernels.make_doc_kernel)
+       │  text-only docs pass through as Arrow; every other doc is rebuilt:
+       │  each media span -> its cues, in (offset, seq, kind, text,
+       │  media_ref) order, plus one _metric/_error row in ``side``
+       ▼
+    extracted(doc_id, spans [, side]) — same shape as input, row for row
+
+``mode='two_phase'`` — the skew plan, flat rows re-merged on doc_id:
 
     documents ──posexplode──▶ spans ──filter kind='media'──▶ payloads
-       │                                   │ unbase64 (JVM-side)
+       │                                   │ try_to_binary (JVM-side)
        │                                   ▼
-       │                      mapInPandas extraction kernel(s)
-       │                                   │  cue rows + metric/error rows
+       │             parse kernel ─▶ rebalance(doc_id, offset, seq) ─▶
+       │             decode+OCR kernel   cue rows + metric/error rows
        ▼                                   ▼
     text spans ────────── unionByName ──▶ all span rows
-                                           │ groupBy(doc_id)           ← the
-                                           │ sort_array(collect_list)    one
-                                           ▼                             shuffle
-                      extracted(doc_id, spans) — same shape as input
+                                           │ groupBy(doc_id)
+                                           │ sort_array(collect_list)
+                                           ▼
+                      extracted(doc_id, spans), left-joined to every doc_id
 
 Scale notes (100 TB / 10^12 docs):
-  * the explode, filter and unbase64 are narrow — no shuffle; column
-    pruning pushes the parquet/Iceberg scan down to (doc_id, spans);
-  * the only required shuffle is the final groupBy(doc_id) of *small*
-    string rows (payload bytes never shuffle in fused mode);
-  * ``mode='two_phase'`` adds one rebalance shuffle of parsed compositions
-    (RLE-compressed, still far smaller than raw payloads) so skewed
-    payloads fan out before the expensive decode+OCR (north_rule skew);
-  * ``balance=True`` round-robins media rows before the fused kernel when
-    the *input* partitioning is skewed (many payloads in few files).
+  * the default plan reads ``documents`` once and never shuffles: each
+    document arrives whole in one row (FIXTURES.md §1), so the per-doc
+    kernel rebuilds it in place; column pruning pushes the scan down to
+    (doc_id, spans).  Parallelism is the scan's splits — the session asks
+    for >= 4x slots of them (``spark.sql.files.minPartitionNum``);
+  * the unit of work is one document, so a monster payload pins one task;
+    ``mode='two_phase'`` is the way to spread it: one rebalance shuffle of
+    parsed compositions (RLE-compressed, still far smaller than raw
+    payloads) fans them out before the expensive decode+OCR (north_rule
+    skew), at the cost of three scans and the re-merge shuffle;
+  * ``balance`` / ``rebalance_partitions`` tune the flat plans only
+    (``extract_cue_rows``, ``mode='two_phase'``): ``balance='auto'``
+    hash-repartitions media rows before the first kernel when the input
+    has fewer partitions than 4x slots.
 """
 
 from __future__ import annotations
@@ -32,6 +53,8 @@ from pyspark.sql import functions as F
 from .kernels import (
     COMP_SCHEMA,
     CUE_SCHEMA,
+    DOC_SCHEMA,
+    make_doc_kernel,
     make_fused_kernel,
     make_ocr_kernel,
     make_parse_kernel,
@@ -43,10 +66,17 @@ __all__ = [
     "extract_cue_rows",
     "assemble_spans",
     "extract",
+    "extract_with_side",
     "split_side_channel",
     "render_srt_cues",
     "render_srt_documents",
 ]
+
+
+def _payload(text):
+    """JVM-side base64 decode; NULL (an ``invalid base64`` error row
+    downstream) instead of a failed task when ``text`` is not base64."""
+    return F.try_to_binary(text, F.lit("base64")).alias("payload")
 
 
 def explode_spans(documents: DataFrame) -> DataFrame:
@@ -68,12 +98,15 @@ def extract_cue_rows(
     backend: OcrBackend | None = None,
     balance: bool | str = "auto",
     rebalance_partitions: int | str | None = None,
-    size_threshold: int = 4 << 20,
     skip_merge: bool = False,
     force_merge_all: bool = False,
     multi_object_opacity_fix: bool = False,
 ) -> DataFrame:
     """Media spans -> cue/metric/error rows (flat), pre-re-aggregation.
+
+    The flat plans: ``mode='fused'`` runs the single-pass kernel over one
+    row per media span, ``mode='two_phase'`` the parse kernel, composition
+    rebalance and decode+OCR kernel.  Both emit CUE_SCHEMA rows.
 
     ``balance='auto'`` repartitions the media rows only when the input has
     fewer partitions than the cluster has slots: the decode+OCR kernel is
@@ -87,7 +120,7 @@ def extract_cue_rows(
         "doc_id",
         "offset",
         "media_ref",
-        F.unbase64(F.col("text")).alias("payload"),  # JVM-side base64 decode
+        _payload(F.col("text")),
     )
     slots = media.sparkSession.sparkContext.defaultParallelism
     if balance == "auto":
@@ -111,82 +144,59 @@ def extract_cue_rows(
             F.col("offset"),
         )
 
-    kernel_kw = dict(
-        backend=backend,
-        skip_merge=skip_merge,
-        force_merge_all=force_merge_all,
-        multi_object_opacity_fix=multi_object_opacity_fix,
-    )
-
-    def fused(rows: DataFrame) -> DataFrame:
-        return rows.mapInPandas(make_fused_kernel(**kernel_kw), schema=CUE_SCHEMA)
-
-    def two_phase(rows: DataFrame) -> DataFrame:
-        comps = rows.mapInPandas(
-            make_parse_kernel(skip_merge=skip_merge, force_merge_all=force_merge_all),
-            schema=COMP_SCHEMA,
-        )
-        # hash, not round-robin: avoids the sortBeforeRepartition local sort
-        # of the pickled-composition binaries; (doc_id, offset, seq) is
-        # unique per composition, so buckets stay balanced.  ALL rows ride
-        # the one repartition — the tiny _metric/_error side channel passes
-        # through the OCR kernel unchanged instead of a second filter
-        # branch, which (uncached) would re-execute the whole parse kernel.
-        #
-        # Width: default 4x slots.  The decode+OCR stage is CPU-bound per
-        # COMPOSITION, which byte-based AQE coalescing cannot see (it
-        # balances shuffle bytes, and RLE size is a poor proxy for pixel
-        # count x OCR cost).  Measured on the skewed bench corpus (BENCH/
-        # BASELINE.md skew sections, probe-gated, two runs): every
-        # two-phase width beats fused (clean 15.8s) by ~2x; among widths,
-        # 1x slots is clean-fastest on this host (6.3-7.5s, single wave —
-        # local[32] has uniform cores, so extra waves only add Python-
-        # worker dispatch overhead), 4x ~7.6-8.3s, while 8x and
-        # AQE-advisory are consistently worst — AQE coalesces the small
-        # composition rows by BYTES into too few tasks for a
-        # per-row-CPU-bound stage.  4x stays the default for the
-        # production shape: on a heterogeneous multi-executor cluster,
-        # several units per slot is what lets dynamic scheduling absorb
-        # per-composition cost variance and executor speed skew, and it
-        # bounds partition size at high composition counts; pass
-        # ``rebalance_partitions=slots`` for the measured single-wave
-        # fast path on uniform local hosts, or 'aqe' to repartition by
-        # key only with AQE choosing the width.
-        keys = (F.col("doc_id"), F.col("offset"), F.col("seq"))
-        if rebalance_partitions == "aqe":
-            rebalanced = comps.repartition(*keys)
-        else:
-            rebalanced = comps.repartition(rebalance_partitions or 4 * slots, *keys)
-        return rebalanced.mapInPandas(
-            make_ocr_kernel(
-                backend=backend, multi_object_opacity_fix=multi_object_opacity_fix
+    if mode == "fused":
+        return media.mapInPandas(
+            make_fused_kernel(
+                backend=backend,
+                skip_merge=skip_merge,
+                force_merge_all=force_merge_all,
+                multi_object_opacity_fix=multi_object_opacity_fix,
             ),
             schema=CUE_SCHEMA,
         )
-
-    if mode == "fused":
-        return fused(media)
-    if mode == "two_phase":
-        return two_phase(media)
-    if mode == "size_bucketed":
-        # SURVEY.md §4.3.1: small payloads take the no-extra-shuffle fused
-        # path; monster payloads (whose per-composition decode+OCR would
-        # pin one task) take the two-phase split/rebalance path.  The size
-        # predicate is a cheap JVM expression over the already-decoded
-        # binary; results are a bag union, order restored downstream.
-        #
-        # Cost note (deliberate tradeoff): the two branches are separate
-        # physical pipelines, so the source is SCANNED TWICE — every
-        # payload's bytes are read in both branches and discarded by the
-        # filter in one.  That is worth it only when monster payloads are
-        # rare and a second scan is cheaper than shuffling every small
-        # payload's parsed compositions; when scan cost dominates, plain
-        # two_phase (one scan, one composition-row shuffle) is the better
-        # 100 TB default.  A persist() boundary on `media` would trade the
-        # second scan for caching every payload byte — worse at scale.
-        big = F.octet_length("payload") > size_threshold
-        return fused(media.filter(~big)).unionByName(two_phase(media.filter(big)))
-    raise ValueError(f"unknown mode: {mode!r} (fused | two_phase | size_bucketed)")
+    if mode != "two_phase":
+        raise ValueError(f"unknown mode: {mode!r} (fused | two_phase)")
+    comps = media.mapInPandas(
+        make_parse_kernel(skip_merge=skip_merge, force_merge_all=force_merge_all),
+        schema=COMP_SCHEMA,
+    )
+    # hash, not round-robin: avoids the sortBeforeRepartition local sort
+    # of the pickled-composition binaries; (doc_id, offset, seq) is
+    # unique per composition, so buckets stay balanced.  ALL rows ride
+    # the one repartition — the tiny _metric/_error side channel passes
+    # through the OCR kernel unchanged instead of a second filter
+    # branch, which (uncached) would re-execute the whole parse kernel.
+    #
+    # Width: default 4x slots.  The decode+OCR stage is CPU-bound per
+    # COMPOSITION, which byte-based AQE coalescing cannot see (it
+    # balances shuffle bytes, and RLE size is a poor proxy for pixel
+    # count x OCR cost).  Measured on the skewed bench corpus (BENCH/
+    # BASELINE.md skew sections, probe-gated, two runs): every
+    # two-phase width beats fused (clean 15.8s) by ~2x; among widths,
+    # 1x slots is clean-fastest on this host (6.3-7.5s, single wave —
+    # local[32] has uniform cores, so extra waves only add Python-
+    # worker dispatch overhead), 4x ~7.6-8.3s, while 8x and
+    # AQE-advisory are consistently worst — AQE coalesces the small
+    # composition rows by BYTES into too few tasks for a
+    # per-row-CPU-bound stage.  4x stays the default for the
+    # production shape: on a heterogeneous multi-executor cluster,
+    # several units per slot is what lets dynamic scheduling absorb
+    # per-composition cost variance and executor speed skew, and it
+    # bounds partition size at high composition counts; pass
+    # ``rebalance_partitions=slots`` for the measured single-wave
+    # fast path on uniform local hosts, or 'aqe' to repartition by
+    # key only with AQE choosing the width.
+    keys = (F.col("doc_id"), F.col("offset"), F.col("seq"))
+    if rebalance_partitions == "aqe":
+        rebalanced = comps.repartition(*keys)
+    else:
+        rebalanced = comps.repartition(rebalance_partitions or 4 * slots, *keys)
+    return rebalanced.mapInPandas(
+        make_ocr_kernel(
+            backend=backend, multi_object_opacity_fix=multi_object_opacity_fix
+        ),
+        schema=CUE_SCHEMA,
+    )
 
 
 def split_side_channel(cue_rows: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -284,6 +294,43 @@ def render_srt_documents(documents: DataFrame, **kw) -> DataFrame:
     return render_srt_cues(cues)
 
 
+def extract_with_side(
+    documents: DataFrame,
+    backend: OcrBackend | None = None,
+    skip_merge: bool = False,
+    force_merge_all: bool = False,
+    multi_object_opacity_fix: bool = False,
+) -> DataFrame:
+    """The default one-scan plan: documents -> ``(doc_id, spans, side)``.
+
+    ``side`` holds each doc's ``_metric``/``_error`` rows (CUE_SCHEMA
+    without ``doc_id``), one per media span.  One output row per input
+    row: ``doc_id`` is the table key (FIXTURES.md §1), and rows that share
+    one are not merged.
+    """
+    with_payloads = documents.select(
+        "doc_id",
+        F.transform(
+            "spans",
+            lambda s: F.struct(
+                s["kind"].alias("kind"),
+                # media text is only the payload's base64; don't ship it twice
+                F.when(s["kind"] != "media", s["text"]).alias("text"),
+                s["media_ref"].alias("media_ref"),
+                s["offset"].alias("offset"),
+                F.when(s["kind"] == "media", _payload(s["text"])).alias("payload"),
+            ),
+        ).alias("spans"),
+    )
+    kernel = make_doc_kernel(
+        backend=backend,
+        skip_merge=skip_merge,
+        force_merge_all=force_merge_all,
+        multi_object_opacity_fix=multi_object_opacity_fix,
+    )
+    return with_payloads.mapInArrow(kernel, schema=DOC_SCHEMA)
+
+
 def extract(
     documents: DataFrame,
     mode: str = "fused",
@@ -294,8 +341,20 @@ def extract(
 
     Text spans pass through; each media span becomes one 'cue' span per
     merged composition, carrying the source media_ref/offset, ordered by
-    (offset, seq) via the struct sort key.
+    (offset, seq, kind, text, media_ref); spans of other kinds are dropped.
+    A doc whose every payload failed keeps its row, with its text spans.
+
+    ``mode='fused'`` (default) is the one-scan plan of
+    :func:`extract_with_side`, which keeps duplicate ``doc_id`` rows apart;
+    ``kw`` are the kernel flags.  ``mode='two_phase'`` is the flat skew
+    plan (:func:`extract_cue_rows` + :func:`assemble_spans`), which merges
+    rows sharing a ``doc_id`` and also takes ``balance`` and
+    ``rebalance_partitions``.
     """
-    return assemble_spans(
-        documents, extract_cue_rows(documents, mode=mode, backend=backend, **kw)
-    )
+    if mode == "fused":
+        return extract_with_side(documents, backend=backend, **kw).drop("side")
+    if mode == "two_phase":
+        return assemble_spans(
+            documents, extract_cue_rows(documents, mode=mode, backend=backend, **kw)
+        )
+    raise ValueError(f"unknown mode: {mode!r} (fused | two_phase)")

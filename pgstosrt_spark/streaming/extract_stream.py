@@ -50,7 +50,11 @@ def extract_stream(documents: DataFrame) -> DataFrame:
         "doc_id", "offset", F.lit(0).alias("seq"), "kind", "text", "media_ref"
     )
     media = spans.filter(F.col("kind") == "media").select(
-        "doc_id", "offset", "media_ref", F.unbase64(F.col("text")).alias("payload")
+        "doc_id",
+        "offset",
+        "media_ref",
+        # NULL, then an ``invalid base64`` error row, for non-base64 text
+        F.try_to_binary(F.col("text"), F.lit("base64")).alias("payload"),
     )
     cues = media.mapInPandas(make_fused_kernel(), schema=CUE_SCHEMA).filter(
         F.col("kind") == "cue"

@@ -54,6 +54,58 @@ def test_checkpoint_resume_idempotent(spark, tmp_path):
     assert run_with_checkpoints(spark, docs, out, n_batches=4) == []
 
 
+def test_checkpoint_metrics_parity(spark, tmp_path):
+    """After a killed run and its resume, metrics/ holds exactly one
+    _metric or _error row per media payload, the manifests' n_docs sum to
+    the corpus size, and the lineage rollup has no NULL count."""
+    from pgstosrt_spark.metrics import partition_lineage
+    from pgstosrt_spark.sources.tables import DOCUMENTS_SCHEMA
+
+    bad = spark.createDataFrame(
+        [
+            {
+                "doc_id": "bad-b64",
+                "spans": [
+                    {"kind": "text", "text": "t", "media_ref": "", "offset": 0},
+                    {"kind": "media", "text": "@@not base64!!", "media_ref": "pgs://x/1", "offset": 1},
+                ],
+            }
+        ],
+        schema=DOCUMENTS_SCHEMA,
+    )
+    docs = synthesize_documents(spark, SF_DIR).limit(30).unionByName(bad).cache()
+    out = str(tmp_path / "ckpt_parity")
+    first = run_with_checkpoints(spark, docs, out, n_batches=3, max_batches=1)
+    second = run_with_checkpoints(spark, docs, out, n_batches=3)
+    assert sorted(first + second) == [0, 1, 2]
+
+    payloads = sorted(
+        (r["doc_id"], r["s"]["offset"], r["s"]["media_ref"])
+        for r in docs.select("doc_id", F.explode("spans").alias("s")).collect()
+        if r["s"]["kind"] == "media"
+    )
+    metrics = spark.read.parquet(os.path.join(out, "metrics"))
+    side = sorted(
+        (r["doc_id"], r["offset"], r["media_ref"])
+        for r in metrics.filter(F.col("kind").isin("_metric", "_error")).collect()
+    )
+    assert side == payloads
+    assert metrics.filter(F.col("kind") == "_error").count() == 1
+
+    n_docs = 0
+    for batch in committed_batches(out):
+        with open(os.path.join(out, "_manifest", f"{batch}.json")) as fh:
+            n_docs += json.load(fh)["n_docs"]
+    assert n_docs == docs.count()
+
+    lineage = partition_lineage(metrics).collect()
+    assert lineage
+    counts = ("n_payloads", "n_comps", "n_cues", "n_dropped", "n_bytes", "n_errors")
+    assert all(r[c] is not None for r in lineage for c in counts)
+    assert sum(r["n_cues"] + r["n_dropped"] for r in lineage) == sum(r["n_comps"] for r in lineage)
+    assert sum(r["n_payloads"] for r in lineage) == len(payloads) - 1
+
+
 def test_checkpoint_manifest_via_hadoop_fs_uri(spark, tmp_path):
     """The manifest protocol must work through the Hadoop FS layer with a
     scheme-qualified URI (the cluster-storage path shape) — driver-local

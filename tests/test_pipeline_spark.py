@@ -7,13 +7,23 @@ sequence equals the pure-Python oracle on (kind, text, media_ref, order).
 from __future__ import annotations
 
 import base64
+import json
+import struct
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from pgstosrt_spark.fixtures import corpus, encoder as enc
-from pgstosrt_spark.pipeline import extract, extract_cue_rows, split_side_channel
-from pgstosrt_spark.sources.tables import DOCUMENTS_SCHEMA
+from pgstosrt_spark.pgs.decode import decode_media_payload
+from pgstosrt_spark.pipeline import (
+    extract,
+    extract_cue_rows,
+    extract_with_side,
+    split_side_channel,
+)
+from pgstosrt_spark.sources.tables import DOCUMENTS_SCHEMA, SPAN_STRUCT
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -59,7 +69,9 @@ def test_extract_two_phase_matches_fused(spark, small_docs):
 
 def test_extract_balance_equivalent(spark, small_docs):
     docs, rows = small_docs
-    got = _collect_spans(extract(docs, balance=True, rebalance_partitions=4))
+    got = _collect_spans(
+        extract(docs, mode="two_phase", balance=True, rebalance_partitions=4)
+    )
     assert got == _expected(rows)
 
 
@@ -180,7 +192,7 @@ def test_skew_doc_many_media_spans(spark):
 def test_skew_bench_corpus_mode_equivalence(spark):
     """The bench's skewed corpus (1 wide doc + monster single-span docs,
     fixtures.corpus.synthesize_skewed_documents) must extract identically
-    under fused / two_phase / two_phase-AQE-width / size_bucketed — the
+    under fused / two_phase / two_phase-AQE-width — the
     skew bench (VERDICT r2 item 2) times these modes, so their
     equivalence is the precondition for the comparison meaning anything."""
     from pgstosrt_spark.fixtures.corpus import synthesize_skewed_documents
@@ -204,17 +216,7 @@ def test_skew_bench_corpus_mode_equivalence(spark):
         _collect_spans(extract(sk, mode="two_phase", rebalance_partitions="aqe"))
         == want
     )
-    assert (
-        _collect_spans(extract(sk, mode="size_bucketed", size_threshold=4096)) == want
-    )
     sk.unpersist()
-
-
-def test_size_bucketed_matches_fused(spark, small_docs):
-    docs, rows = small_docs
-    # threshold of 2 KB routes some payloads through each path
-    got = _collect_spans(extract(docs, mode="size_bucketed", size_threshold=2048))
-    assert got == _expected(rows)
 
 
 def test_srt_render_matches_pure_python(spark, small_docs):
@@ -244,3 +246,261 @@ def test_srt_render_matches_pure_python(spark, small_docs):
             if blocks:
                 expected[(d, span["media_ref"])] = srt
     assert got == expected
+
+
+# ------------------------------------------------- one-scan kernel edge cases
+
+# spans nullable, so a NULL spans list can be fed in
+NULLABLE_SPANS_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.StringType(), False),
+        T.StructField("spans", T.ArrayType(SPAN_STRUCT), True),
+    ]
+)
+
+
+def _overrun_first_ods(sup: bytes) -> bytes:
+    """The first object's height cut to one row: its RLE then overruns the
+    object, rasterize raises DecodeError and that composition is dropped."""
+    out = bytearray(sup)
+    pos = 0
+    while pos < len(out):
+        seg_type, size = out[pos + 10], struct.unpack_from(">H", out, pos + 11)[0]
+        if seg_type == enc.SEG_ODS:
+            struct.pack_into(">H", out, pos + 13 + 9, 1)  # ODS height field
+            break
+        pos += 13 + size
+    return bytes(out)
+
+
+def _b64(payload: bytes) -> str:
+    return base64.b64encode(payload).decode()
+
+
+def _span(kind, text, offset, ref=""):
+    return {"kind": kind, "text": text, "media_ref": ref, "offset": offset}
+
+
+def _edge_docs() -> list[dict]:
+    good = _b64(enc.build_sup_from_cues([("EDGE A", 90_000, 180_000), ("EDGE B", 270_000, 360_000)]))
+    solo = _b64(enc.build_sup_from_cues([("SOLO", 90_000, 180_000)]))
+    overrun = _b64(
+        _overrun_first_ods(
+            enc.build_sup_from_cues([("BAD ONE", 90_000, 180_000), ("GOOD TWO", 270_000, 360_000)])
+        )
+    )
+    corrupt = _b64(b"MKPG" + b"\xff" * 8)  # truncated container
+    return [
+        {"doc_id": "null-spans", "spans": None},
+        {"doc_id": "empty-spans", "spans": []},
+        {"doc_id": "text-only", "spans": [_span("text", f"w{i}", i) for i in range(3)]},
+        {"doc_id": "media-only", "spans": [_span("media", good, 0, "pgs://m/0")]},
+        {
+            "doc_id": "corrupt",
+            "spans": [_span("text", "before", 0), _span("media", corrupt, 1, "pgs://c/1")],
+        },
+        {
+            "doc_id": "bad-b64",
+            "spans": [
+                _span("text", "keep me", 0),
+                _span("media", "@@not base64!!", 1, "pgs://b/1"),
+                _span("text", "and me", 2),
+            ],
+        },
+        {
+            "doc_id": "unknown-kind",
+            "spans": [_span("text", "a", 0), _span("image", "x", 1, "img://1"), _span("text", "b", 2)],
+        },
+        {
+            "doc_id": "out-of-order",
+            "spans": [
+                _span("text", "third", 2),
+                _span("text", "first", 0),
+                _span("media", solo, 1, "pgs://o/1"),
+                _span("text", "tied", 1),
+            ],
+        },
+        {
+            "doc_id": "dup-offsets",
+            "spans": [_span("text", "zz", 0), _span("text", "aa", 0), _span("text", "mm", 1)],
+        },
+        {"doc_id": "overrun", "spans": [_span("media", overrun, 0, "pgs://r/0")]},
+        {"doc_id": "text-two", "spans": [_span("text", "x", 5), _span("text", None, 9)]},
+    ]
+
+
+def _null_first(row):
+    return [(v is not None, v) for v in row]
+
+
+def _oracle_doc(spans) -> list[tuple]:
+    """Pure-Python extraction of one doc: text spans kept, media spans
+    replaced by the oracle's cues, other kinds dropped, in the null-first
+    (offset, seq, kind, text, media_ref) order."""
+    rows = []
+    for s in spans or []:
+        if s["kind"] == "text":
+            rows.append((s["offset"], 0, "text", s["text"], s["media_ref"]))
+        elif s["kind"] == "media":
+            try:
+                cues = decode_media_payload(base64.b64decode(s["text"], validate=True))
+            except Exception:  # the kernels' _error row: no cues
+                cues = []
+            rows += [(s["offset"], seq, "cue", text, s["media_ref"]) for seq, text in cues]
+    rows.sort(key=_null_first)
+    return [(kind, text, ref, off) for off, _seq, kind, text, ref in rows]
+
+
+def _full_spans(df) -> dict:
+    return {r["doc_id"]: [tuple(s) for s in r["spans"]] for r in df.collect()}
+
+
+def _failed_tasks(spark, group: str) -> int:
+    tracker = spark.sparkContext.statusTracker()
+    failed = 0
+    for job in tracker.getJobIdsForGroup(group):
+        for stage in tracker.getJobInfo(job).stageIds:
+            info = tracker.getStageInfo(stage)
+            failed += info.numFailedTasks if info else 0
+    return failed
+
+
+@pytest.mark.parametrize("batch_rows", [2, 512])
+def test_one_scan_edge_cases_match_two_phase_and_oracle(spark, batch_rows):
+    """NULL/empty spans, text-only and media-only docs, corrupt payloads,
+    invalid base64, unknown kinds, out-of-order and duplicate offsets: the
+    one-scan plan equals two_phase and the pure-Python oracle, with zero
+    failed tasks — also when a partition's docs span many Arrow batches."""
+    rows = _edge_docs()
+    docs = spark.createDataFrame(rows, schema=NULLABLE_SPANS_SCHEMA).coalesce(1)
+    want = {d["doc_id"]: _oracle_doc(d["spans"]) for d in rows}
+    sc = spark.sparkContext
+    group = f"edge-cases-{batch_rows}"
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_rows))
+    sc.setJobGroup(group, group)
+    try:
+        one_scan = _full_spans(extract(docs))
+        two_phase = _full_spans(extract(docs, mode="two_phase"))
+    finally:
+        sc.setJobGroup("", "")
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
+    assert one_scan == two_phase == want
+    assert _failed_tasks(spark, group) == 0
+    assert want["null-spans"] == want["empty-spans"] == []
+    assert [k for k, *_ in want["out-of-order"]] == ["text", "text", "cue", "text"]
+    assert [t for _k, t, *_ in want["dup-offsets"]] == ["aa", "zz", "mm"]
+
+
+def test_doc_kernel_sliced_batches():
+    """The per-document kernel reads only its batch's slice of the spans
+    values: a batch cut into slices gives the rows of the whole batch."""
+    from pgstosrt_spark.kernels import extract_batch
+    from pgstosrt_spark.pgs.ocr import GlyphAtlasOcr
+
+    in_span = pa.struct(
+        [
+            ("kind", pa.string()),
+            ("text", pa.string()),
+            ("media_ref", pa.string()),
+            ("offset", pa.int32()),
+            ("payload", pa.binary()),
+        ]
+    )
+
+    def payload(s):
+        if s["kind"] != "media":
+            return None
+        try:
+            return base64.b64decode(s["text"], validate=True)
+        except ValueError:
+            return None
+
+    rows = _edge_docs()
+    batch = pa.RecordBatch.from_pylist(
+        [
+            {
+                "doc_id": d["doc_id"],
+                "spans": None
+                if d["spans"] is None
+                else [
+                    {**s, "text": None if s["kind"] == "media" else s["text"], "payload": payload(s)}
+                    for s in d["spans"]
+                ],
+            }
+            for d in rows
+        ],
+        schema=pa.schema([("doc_id", pa.string()), ("spans", pa.list_(in_span))]),
+    )
+    ocr = GlyphAtlasOcr()
+    whole = extract_batch(batch, ocr, 0)
+    pieces = [extract_batch(batch.slice(i, 3), ocr, 0) for i in range(0, len(rows), 3)]
+    keep = lambda b: b.select(["doc_id", "spans"]).to_pylist()  # noqa: E731
+    assert [r for p in pieces for r in keep(p)] == keep(whole)
+    got = {r["doc_id"]: [tuple(s.values()) for s in r["spans"]] for r in keep(whole)}
+    assert got == {d["doc_id"]: _oracle_doc(d["spans"]) for d in rows}
+    side = {r["doc_id"]: r["side"] for r in whole.to_pylist()}
+    assert side["text-only"] == [] and side["null-spans"] == []
+    assert [(s["kind"], s["text"]) for s in side["bad-b64"]] == [("_error", "invalid base64")]
+
+
+def test_invalid_base64_does_not_fail_the_job(spark):
+    """A media span whose text is not base64 becomes one ``invalid base64``
+    error row: the job runs, the doc keeps its text spans, and the other
+    docs are unaffected — in both modes."""
+    solo = _b64(enc.build_sup_from_cues([("FINE", 90_000, 180_000)]))
+    docs = spark.createDataFrame(
+        [
+            {
+                "doc_id": "bad",
+                "spans": [
+                    _span("text", "intro", 0),
+                    _span("media", "@@not base64!!", 1, "pgs://bad/1"),
+                    _span("text", "outro", 2),
+                ],
+            },
+            {"doc_id": "fine", "spans": [_span("media", solo, 0, "pgs://fine/0")]},
+        ],
+        schema=DOCUMENTS_SCHEMA,
+    )
+    want = {
+        "bad": [("text", "intro", "", 0), ("text", "outro", "", 2)],
+        "fine": [("cue", "00:00:01,000 --> 00:00:02,000\nFINE", "pgs://fine/0", 0)],
+    }
+    assert _full_spans(extract(docs)) == want
+    assert _full_spans(extract(docs, mode="two_phase")) == want
+    side = [r for d in extract_with_side(docs).collect() for r in d["side"]]
+    assert sorted((r["kind"], r["media_ref"]) for r in side) == [
+        ("_error", "pgs://bad/1"),
+        ("_metric", "pgs://fine/0"),
+    ]
+    assert [r["text"] for r in side if r["kind"] == "_error"] == ["invalid base64"]
+    for mode in ("fused", "two_phase"):
+        _cues, flat_side = split_side_channel(extract_cue_rows(docs, mode=mode))
+        errors = flat_side.filter(F.col("kind") == "_error").collect()
+        assert [r["text"] for r in errors] == ["invalid base64"]
+
+
+def test_dropped_composition_is_counted(spark):
+    """A composition whose RLE overruns its object is dropped (as the
+    reference does) but counted: ``cues + dropped == comps`` in the
+    payload's _metric row, in both single-pass plans, and the drop shows
+    in the lineage rollup."""
+    from pgstosrt_spark.metrics import partition_lineage
+
+    payload = _overrun_first_ods(
+        enc.build_sup_from_cues([("BAD ONE", 90_000, 180_000), ("GOOD TWO", 270_000, 360_000)])
+    )
+    assert len(decode_media_payload(payload)) == 1
+    docs = spark.createDataFrame(
+        [{"doc_id": "d", "spans": [_span("media", _b64(payload), 0, "pgs://d/0")]}],
+        schema=DOCUMENTS_SCHEMA,
+    )
+    _cues, flat_side = split_side_channel(extract_cue_rows(docs))
+    doc_side = extract_with_side(docs).select(F.explode("side").alias("s")).select("s.*")
+    for side in (flat_side, doc_side):
+        [row] = side.collect()
+        m = json.loads(row["text"])
+        assert (m["comps"], m["cues"], m["dropped"]) == (2, 1, 1)
+        assert m["cues"] + m["dropped"] == m["comps"]
+        [lin] = partition_lineage(side).collect()
+        assert (lin["n_payloads"], lin["n_comps"], lin["n_cues"], lin["n_dropped"]) == (1, 2, 1, 1)

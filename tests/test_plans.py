@@ -172,38 +172,68 @@ def test_embedding_near_dup_assignment_computed_once(spark):
     sim.unpersist_ivf_caches()
 
 
-def test_extraction_plan_single_pass_no_payload_shuffle(spark):
-    """Fused mode: the only Exchange is the final groupBy(doc_id) of small
-    string rows — base64 payloads never shuffle."""
+def _media_docs(spark, n: int = 1):
     import base64
 
     from pgstosrt_spark.fixtures import encoder as enc
-    from pgstosrt_spark.pipeline import extract
     from pgstosrt_spark.sources.tables import DOCUMENTS_SCHEMA
 
     payload = base64.b64encode(enc.build_sup_from_cues([("X", 90_000, 180_000)])).decode()
-    docs = spark.createDataFrame(
+    return spark.createDataFrame(
         [
             {
-                "doc_id": "d",
+                "doc_id": f"d{i}",
                 "spans": [
-                    {"kind": "media", "text": payload, "media_ref": "pgs://d/0", "offset": 0}
+                    {"kind": "media", "text": payload, "media_ref": f"pgs://d{i}/0", "offset": 0}
                 ],
             }
+            for i in range(n)
         ],
         schema=DOCUMENTS_SCHEMA,
     )
-    plan = _plan(extract(docs, balance=False), mode="simple")
-    # the kernel runs BEFORE any exchange; exchanges appear only above it
+
+
+def test_extraction_plan_single_pass_no_payload_shuffle(spark):
+    """Flat cue rows: the kernel runs BEFORE any exchange, so base64
+    payloads never shuffle; ``balance='auto'`` adds the media-row rebalance
+    under the two_phase parse kernel only for an under-partitioned input."""
+    from pgstosrt_spark.pipeline import extract_cue_rows
+
+    docs = _media_docs(spark)
+    plan = _plan(extract_cue_rows(docs, balance=False), mode="simple")
     kernel_pos = plan.find("MapInPandas")
     assert kernel_pos > 0
-    below_kernel = plan[kernel_pos:]
-    assert "Exchange" not in below_kernel, "payload bytes would shuffle"
+    assert "Exchange" not in plan[kernel_pos:], "payload bytes would shuffle"
 
-    # auto mode on an under-partitioned input adds exactly the rebalance
-    plan_auto = _plan(extract(docs.coalesce(1), balance="auto"), mode="simple")
-    kernel_pos = plan_auto.find("MapInPandas")
-    assert "Exchange" in plan_auto[kernel_pos:], "auto-balance should engage"
+    # two_phase: [ocr kernel] <- composition rebalance <- [parse kernel]
+    parse_pos = lambda p: p.rfind("MapInPandas")  # noqa: E731  (the lowest kernel)
+    plan_off = _plan(extract_cue_rows(docs, mode="two_phase", balance=False), mode="simple")
+    assert "Exchange" in plan_off[: parse_pos(plan_off)]
+    assert "Exchange" not in plan_off[parse_pos(plan_off) :]
+    plan_auto = _plan(
+        extract_cue_rows(docs.coalesce(1), mode="two_phase", balance="auto"), mode="simple"
+    )
+    assert "Exchange" in plan_auto[parse_pos(plan_auto) :], "auto-balance should engage"
+
+
+def test_extract_plan_one_scan_zero_exchanges(spark, tmp_path):
+    """The default extract() over a parquet table with >= slots files is
+    one documents FileScan, one MapInArrow kernel and no Exchange."""
+    import os
+    import re
+
+    from pgstosrt_spark.pipeline import extract
+    from pgstosrt_spark.sources.tables import read_documents
+
+    slots = spark.sparkContext.defaultParallelism
+    src = str(tmp_path / "docs")
+    _media_docs(spark, 2 * slots).repartition(slots).write.parquet(src)
+    assert len([f for f in os.listdir(src) if f.endswith(".parquet")]) >= slots
+    plan = _plan(extract(read_documents(spark, src)), mode="simple")
+    nodes = [re.sub(r"^[\s:+|*()0-9-]*", "", line) for line in plan.splitlines()]
+    assert sum(n.startswith("FileScan") for n in nodes) == 1, plan
+    assert sum(n.startswith("MapInArrow") for n in nodes) == 1, plan
+    assert not any(re.match(r"(Broadcast|Shuffle)?Exchange\b", n) for n in nodes), plan
 
 
 def test_asof_join_is_single_shuffle_no_join(spark):
